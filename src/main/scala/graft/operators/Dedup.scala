@@ -839,8 +839,9 @@ object Dedup {
       "/lsh_store"
 
   /** On-disk location of the band store for a dataset directory. The
-    * ceiling rides the path (the pqIndexPath convention), so a ceiling
-    * change can never probe a stale-geometry store. */
+    * ceiling rides the path (the [[Similarity.annIndexPath]]
+    * convention), so a ceiling change can never probe a stale-geometry
+    * store. */
   def lshStorePath(dir: String, corpusCeiling: Long): String =
     s"$lshStoreRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
       s"/near_c$corpusCeiling"

@@ -736,8 +736,8 @@ object Multimodal {
       "/phash_store"
 
   /** On-disk store location for a dataset directory; the ceiling rides
-    * the path (the pqIndexPath convention) so a ceiling change can
-    * never probe a stale-geometry store. */
+    * the path (the [[Similarity.annIndexPath]] convention) so a ceiling
+    * change can never probe a stale-geometry store. */
   def phashStorePath(dir: String, corpusCeiling: Long): String =
     s"$phashStoreRoot/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
       s"/near_c$corpusCeiling"

@@ -838,8 +838,6 @@ object Similarity {
       refineIters: Int = RefineIters): DataFrame =
     packCodebook(ivfCodebookRows(corpus, centroidBudget, refineIters))
 
-  /** [[ivfCodebook]] as centroid ROWS (c_id, c_e, c_nrm) — the form the
-    * residual computation of [[ivfPqIndex]] joins against. */
   /** Deterministic bounded codebook-training sample: the min(n, cap)
     * vectors with the smallest (xxhash64(vec_id), vec_id) — a rank
     * threshold, not a rate, so training cost is CONSTANT in corpus
@@ -854,6 +852,8 @@ object Similarity {
   private def trainingSample(vecs: DataFrame, cap: Int): DataFrame =
     vecs.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(cap)
 
+  /** [[ivfCodebook]] as centroid ROWS (c_id, c_e, c_nrm) — the form the
+    * residual computation of [[annBuild]] joins against. */
   def ivfCodebookRows(corpus: DataFrame,
       centroidBudget: Int = CentroidBudget,
       refineIters: Int = RefineIters): DataFrame = {
@@ -1136,94 +1136,6 @@ object Similarity {
       .orderBy(col("m"))
   }
 
-  /** ADC (asymmetric distance computation) top-k over PQ codes: per
-    * query, a broadcast M·K partial-dot table (query subvector ×
-    * centroid); each corpus vector's approximate dot is then K lookups
-    * summed — the corpus side touches only its 2-byte codes, never the
-    * float vectors. That asymmetry is the PQ scale story: scanning 10⁹
-    * candidates moves ~2 GB of codes instead of ~256 GB of floats.
-    * Approximate cosine normalizes by the RECONSTRUCTION's norm
-    * (Σ c_nrm² over the vector's cells), carried through the same
-    * aggregation — no second join.
-    *
-    * The correctness face carries an in-plan identity certificate: for
-    * the emitted top-k, the table-lookup score must equal (1e-9) the
-    * directly-computed cosine against the flattened reconstruction —
-    * table construction and reconstruction are independent paths
-    * through the codebook. */
-  def pqAdcRanked(vecs: DataFrame, queryPred: Column,
-      k: Int = 5, m: Int = PqM,
-      refineIters: Int = RefineIters): DataFrame = {
-    val (cents, assigned) = pqAssignments(vecs, refineIters = refineIters,
-      m = m)
-    pqAdcRankedFrom(cents, assigned, vecs, queryPred, k, m)
-  }
-
-  private def pqAdcRankedFrom(cents: DataFrame, assigned: DataFrame,
-      vecs: DataFrame, queryPred: Column, k: Int,
-      m: Int = PqM): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val subWidth = Dim / m
-    val codes = joinCents(assigned, cents)
-      .select(col("vec_id"), col("m"), col("cell"),
-        (col("c_nrm") * col("c_nrm")).as("c_nrm2"))
-    val queries = pqQueries(vecs, queryPred)
-    // per-query partial-dot table: Q·M·K rows, broadcastable
-    val qtab = queries.crossJoin(pqPack(cents))
-      .select(col("query_id"), col("q_nrm"),
-        explode(transform(col("cents"), c => struct(
-          c.getField("m").as("m"), c.getField("c_id").as("cell"),
-          dot(slice(col("q"), c.getField("m") * subWidth + 1, lit(subWidth)),
-            c.getField("c_e")).as("pd")))).as("t"))
-      .select(col("query_id"), col("q_nrm"),
-        col("t.m").as("m"), col("t.cell").as("cell"), col("t.pd").as("pd"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("vec_id"))
-    codes.join(broadcast(qtab), Seq("m", "cell"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(first(col("q_nrm")).as("q_nrm"), sum(col("pd")).as("adc_dot"),
-        sum(col("c_nrm2")).as("r_nrm2"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_sim", safeCos(col("adc_dot"),
-        col("q_nrm"), sqrt(col("r_nrm2"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  private def pqQueries(vecs: DataFrame, queryPred: Column): DataFrame =
-    vecs.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        l2norm(col("embedding")).as("q_nrm"))
-
-  /** Correctness face for `knn_pq_adc`: ADC retrieves `candidates`
-    * top-C per query (the code-scan stage under test), the C survivors
-    * are re-ranked by EXACT cosine against their original vectors, and
-    * the final top-k is emitted with the in-plan ADC≡reconstruction
-    * identity certificate carried per row. When ADC's top-C contains
-    * the true top-k — and this is exactly the retrieve-then-rerank
-    * shape a production PQ index runs (scan 10⁹ codes, fetch C full
-    * vectors, exact-rank those) — the output EQUALS brute-force top-k,
-    * so the DuckDB oracle recomputes the entire answer independently:
-    * a corrupted code, broken ADC table, or skewed scoring perturbs
-    * the candidate set and fails the hash (the r4 oracle only checked
-    * row existence).
-    *
-    * The face runs a FINER grid than the library default (m=32 2-dim
-    * subspaces instead of 4×16-dim; 16 bytes/vector instead of 2,
-    * still 16× under the raw floats) — the same move as knn_ivf's
-    * probe-every-cell face: parameters chosen so the approximation is
-    * faithful enough to gate. On this near-random synthetic corpus the
-    * default geometry ranks true top-5 neighbors as low as ADC rank
-    * 397/500 at sf0.01 (2-byte codes keep almost none of the weak
-    * cosine signal), so NO candidate budget short of the whole corpus
-    * gates it; at m=32 with ONE Lloyd pass the worst true-top-5 ADC
-    * rank measured 45 at sf0.001, 68 at sf0.01, 80 at sf0.1 — C=200
-    * holds everywhere with ≥2.5× margin, and the pipeline is
-    * deterministic so the margin is stable run to run. (One pass also
-    * measured slightly BETTER margins than two on this corpus — at
-    * 2-dim subspaces the seed geometry is already near-converged, and
-    * dropping the second pass removes a full assign+refine job from
-    * the face: 6.1 → ~4 s at sf0.1.) */
   /** Candidate budget for the retrieve-then-rerank correctness faces,
     * derived from corpus count: max(200, 8·⌈√n⌉). The fixed C=200 was
     * tuned on worst measured true-top-5 ADC ranks ≤ 80 at ≤ sf0.1; at
@@ -1239,282 +1151,243 @@ object Similarity {
   def autoAdcCandidates(n: Long): Int =
     math.max(200, 8 * math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  def knnPqAdcExact(vecs: DataFrame, queryPred: Column, k: Int = 5,
-      candidates: Int = 200, m: Int = 32,
-      refineIters: Int = 1): DataFrame = {
-    val (cents, assigned) = pqAssignments(vecs, refineIters = refineIters,
-      m = m)
-    knnPqAdcFrom(cents, assigned, vecs, queryPred, k, candidates, m)
+  /** `knn.candidates` when set, else [[autoAdcCandidates]] of the
+    * corpus count — the budget every registered ANN face runs. */
+  private def knnCandidates(vecs: DataFrame): Int =
+    Knobs.optInt("knn.candidates").getOrElse(autoAdcCandidates(vecs.count()))
+
+  // ---- one ANN index: spec → build → probe (→ serve) ------------------
+  // PQ and IVF-PQ are one index with an optional coarse quantizer. The
+  // IVF-PQ form is the architecture a 10⁹-vector serving index actually
+  // runs (IVFADC, Jégou/Douze/Schmid 2011): a coarse quantizer routes
+  // every vector to a cell, PQ encodes the RESIDUAL x − c(cell)
+  // (residuals are smaller and better-centered than raw vectors, so the
+  // same code budget keeps more signal), and a query scans only probed
+  // cells' codes with table lookups before an exact re-rank of the few
+  // survivors. Plain PQ is the same index without cells: every code is
+  // scanned and the codes quantize the raw vectors.
+
+  /** ANN index geometry: `cells = None` is plain PQ, `Some(budget)` is
+    * IVF-PQ over that many coarse cells; `m` subspaces × `k` centroids
+    * per subspace codebook, `refineIters` Lloyd passes for every
+    * codebook. The defaults are the registered faces' exact geometry.
+    *
+    * It is a FINER grid than the library default (m=32 2-dim subspaces
+    * instead of 4×16-dim; 16 bytes/vector instead of 2, still 16× under
+    * the raw floats) — the same move as knn_ivf's probe-every-cell
+    * face: parameters chosen so the approximation is faithful enough to
+    * gate. On this near-random synthetic corpus the default geometry
+    * ranks true top-5 neighbors as low as ADC rank 397/500 at sf0.01
+    * (2-byte codes keep almost none of the weak cosine signal), so NO
+    * candidate budget short of the whole corpus gates it; at m=32 with
+    * ONE Lloyd pass the worst true-top-5 ADC rank measured 45 at
+    * sf0.001, 68 at sf0.01, 80 at sf0.1 — C=200 holds everywhere with
+    * ≥2.5× margin, and the pipeline is deterministic so the margin is
+    * stable run to run. (One pass also measured slightly BETTER margins
+    * than two on this corpus — at 2-dim subspaces the seed geometry is
+    * already near-converged, and dropping the second pass removes a
+    * full assign+refine job from the face: 6.1 → ~4 s at sf0.1.) With
+    * cells probed exhaustively the residual grid does as well:
+    * brute-force top-5 sits inside the scan's top-100 at sf0.001,
+    * sf0.01 AND sf0.1 (measured on the {25,50,100} grid). */
+  case class AnnSpec(cells: Option[Int] = None, m: Int = 32, k: Int = PqK,
+      refineIters: Int = 1) {
+    /** Directory name: the geometry rides the path, so a parameter
+      * change can never serve a stale-geometry index. */
+    def tag: String = cells.fold("pq")(c => s"ivfpq_c$c") +
+      s"_k${k}_m${m}_r$refineIters"
   }
 
-  /** The retrieve-then-rerank SERVING path of [[knnPqAdcExact]], taking
-    * PREBUILT index state: `cents` = PQ centroid rows (m, c_id, c_e,
-    * c_nrm), `codes` = per-(vector, subspace) assignments — only
-    * (vec_id, m, cell) is read, so a parquet-persisted code store
-    * (2 narrow ints + an id per row) drives it directly. No k-means,
-    * no codebook derivation: the cost is the code scan + C full-vector
-    * fetches per query — the split a production index runs (build once,
-    * serve many). */
-  def knnPqAdcFrom(cents: DataFrame, codes: DataFrame, vecs: DataFrame,
-      queryPred: Column, k: Int = 5, candidates: Int = 200,
-      m: Int = 32): DataFrame = {
+  val PqSpec: AnnSpec = AnnSpec()
+  val IvfPqSpec: AnnSpec = AnnSpec(cells = Some(CentroidBudget))
+
+  /** A built index: PQ centroid rows (m, c_id, c_e, c_nrm), the narrow
+    * code store (vec_id, m, cell[, ivf_cell]) — only those columns are
+    * read, so a parquet-persisted store drives the probe directly — and
+    * the coarse cell rows (c_id, c_e, c_nrm) when the spec has cells. */
+  case class AnnIndex(spec: AnnSpec, cents: DataFrame, codes: DataFrame,
+      cells: Option[DataFrame])
+
+  /** Build the index state. With cells: train the coarse codebook,
+    * route every vector to its nearest cell and PQ-encode the residual;
+    * without: PQ-encode the vectors. All frames are narrow and
+    * checkpointed — an index BUILD materializes its codes by
+    * definition; serving reads them. Broadcast budget: C·Dim floats
+    * (cells) + m·K·(Dim/m) floats (codebooks), both
+    * corpus-size-independent. The only corpus-sized shuffles are the
+    * Lloyd aggregations and the codes⋈cells id join (narrow rows on
+    * both sides). */
+  def annBuild(vecs: DataFrame, spec: AnnSpec): AnnIndex = {
+    val (encoded, cells) = spec.cells match {
+      case None => (vecs, None)
+      case Some(budget) =>
+        val corpus = vecs.select(col("vec_id"), col("embedding").as("e"),
+          l2norm(col("embedding")).as("nrm"))
+        val cells = ivfCodebookRows(corpus, budget, spec.refineIters)
+          .localCheckpoint(true)
+        val residuals = nearestCells(packCodebook(cells))(corpus, 1)
+          .join(broadcast(cells), col("cell") === col("c_id"))
+          .select(col("vec_id"), col("cell").as("ivf_cell"),
+            zip_with(col("e"), col("c_e"), (x, c) => x - c).as("embedding"))
+          .localCheckpoint(true)
+        (residuals, Some(cells))
+    }
+    val (cents, assigned) =
+      pqAssignments(encoded, spec.k, spec.refineIters, spec.m)
+    val codes = assigned.select(col("vec_id"), col("m"), col("cell"))
+    AnnIndex(spec, cents,
+      if (cells.isEmpty) codes
+      else codes.join(encoded.select(col("vec_id"), col("ivf_cell")), "vec_id")
+        .localCheckpoint(true),
+      cells)
+  }
+
+  /** Retrieve-then-rerank top-k over a built index. The code-table
+    * scan ranks each query's candidates by ADC (asymmetric distance
+    * computation): a broadcast per-query M·K partial-dot table (query
+    * subvector × centroid) turns each scanned vector's score into M
+    * lookups summed — the corpus side touches only its small codes,
+    * never the float vectors. That asymmetry is the PQ scale story:
+    * scanning 10⁹ candidates moves ~2 GB of codes instead of ~256 GB of
+    * floats. The `candidates` best per query are re-ranked by EXACT
+    * cosine against their original vectors. When the scan's top-C
+    * contains the true top-k the output EQUALS brute-force top-k, so
+    * the DuckDB oracle recomputes the entire answer independently: a
+    * corrupted code, broken table, or skewed scoring perturbs the
+    * candidate set and fails the hash.
+    *
+    * Scoring: without cells, the ADC cosine normalized by the
+    * RECONSTRUCTION's norm (Σ c_nrm² over the vector's cells, carried
+    * through the same aggregation — no second join); with cells, the
+    * approximate inner product dot(q, c_cell) + Σ_m dot(q_m, recon_m)
+    * over the `nprobe` nearest cells (the default probes every cell of
+    * [[IvfPqSpec]]), the coarse term from a Q·C table.
+    *
+    * Every row carries `adc_ok`, the in-plan identity certificate: the
+    * table-lookup score must equal (1e-9) the score recomputed directly
+    * against the reconstruction — table construction and
+    * reconstruction are independent paths through the codebook. */
+  def annProbe(index: AnnIndex, vecs: DataFrame, queryPred: Column,
+      k: Int = 5, candidates: Int = 200,
+      nprobe: Int = CentroidBudget): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val topC = pqAdcRankedFrom(cents, codes, vecs, queryPred,
-      candidates, m).drop("rank")
-    val recon = joinCents(codes, cents)
-      .groupBy(col("vec_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("m"), col("c_e")))),
-        x => x.getField("c_e"))).as("rv"))
-    val corpus = vecs.select(col("vec_id"), col("embedding").as("n_e"),
-      l2norm(col("embedding")).as("n_nrm"))
-    val queries = pqQueries(vecs, queryPred)
-      .select(col("query_id"), col("q"), col("q_nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    topC
-      .join(recon, "vec_id")
-      .join(corpus, "vec_id")
-      .join(queries, "query_id")
-      .withColumn("direct_sim", safeCos(dot(col("q"), col("rv")),
-        col("qn"), sqrt(col("r_nrm2"))))
-      .withColumn("cos_sim",
-        safeCos(dot(col("n_e"), col("q")), col("n_nrm"), col("qn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos_sim"), 4).as("cos_r"),
-        col("rk").cast("int").as("rank"),
-        (abs(col("adc_sim") - col("direct_sim")) < 1e-9).as("adc_ok"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** [[pqAdcRanked]] plus the in-plan identity certificate over the
-    * emitted k·Q rows (pure-ADC ranking — spec-tested; the registry
-    * face is [[knnPqAdcExact]]). */
-  def knnPqAdc(vecs: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    val (cents, assigned) = pqAssignments(vecs)
-    val topk = pqAdcRankedFrom(cents, assigned, vecs, queryPred, k)
-    val queries = pqQueries(vecs, queryPred)
-    // identity certificate over the k·Q emitted rows only
-    val recon = joinCents(assigned, cents)
-      .groupBy(col("vec_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("m"), col("c_e")))),
-        x => x.getField("c_e"))).as("rv"))
-    topk
-      .join(recon, "vec_id")
-      .join(queries.select(col("query_id"), col("q")), "query_id")
-      // same degenerate-safe form as adc_sim so the identity
-      // certificate compares -2.0 to -2.0 on zero-norm rows
-      .withColumn("direct_sim", safeCos(dot(col("q"), col("rv")),
-        col("q_nrm"), sqrt(col("r_nrm2"))))
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        (abs(col("adc_sim") - col("direct_sim")) < 1e-9).as("adc_ok"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  // ---- IVF-PQ composed index ------------------------------------------
-  // The architecture a 10⁹-vector serving index actually runs (IVFADC,
-  // Jégou/Douze/Schmid 2011): a coarse quantizer routes every vector to
-  // a cell, PQ encodes the RESIDUAL x − c(cell) (residuals are smaller
-  // and better-centered than raw vectors, so the same code budget keeps
-  // more signal), and a query scans only probed cells' codes with
-  // table lookups before an exact re-rank of the few survivors.
-
-  /** Build the index state: (coarse cell rows, residual PQ centroid
-    * rows, per-(vector, subspace) codes carrying the vector's cell).
-    * All three are narrow and checkpointed — an index BUILD
-    * materializes its codes by definition; serving reads them.
-    * Broadcast budget: C·Dim floats (cells) + m·K·(Dim/m) floats
-    * (residual codebooks), both corpus-size-independent. The only
-    * corpus-sized shuffles are the Lloyd aggregations and the final
-    * codes⋈cells id join (narrow rows on both sides). */
-  def ivfPqIndex(vecs: DataFrame, centroidBudget: Int = CentroidBudget,
-      m: Int = PqM,
-      refineIters: Int = RefineIters): (DataFrame, DataFrame, DataFrame) = {
-    val corpus = vecs.select(col("vec_id"), col("embedding").as("e"),
-      l2norm(col("embedding")).as("nrm"))
-    val cells = ivfCodebookRows(corpus, centroidBudget, refineIters)
-      .localCheckpoint(true)
-    val residuals = nearestCells(packCodebook(cells))(corpus, 1)
-      .join(broadcast(cells), col("cell") === col("c_id"))
-      .select(col("vec_id"), col("cell").as("ivf_cell"),
-        zip_with(col("e"), col("c_e"), (x, c) => x - c).as("embedding"))
-      .localCheckpoint(true)
-    val (pqCents, pqAssigned) =
-      pqAssignments(residuals, refineIters = refineIters, m = m)
-    val codes = pqAssigned
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-      .join(residuals.select(col("vec_id"), col("ivf_cell")), "vec_id")
-      .localCheckpoint(true)
-    (cells, pqCents, codes)
-  }
-
-  /** Table-lookup candidate scan over the probed cells: approximate
-    * inner product dot(q, x) ≈ dot(q, c_cell) + Σ_m dot(q_m, recon_m) —
-    * the coarse term from a Q·C table, the residual term from the same
-    * per-query m·K partial-dot table as [[pqAdcRanked]]; a scanned
-    * vector contributes only its m small codes. Returns the per-query
-    * `candidates` best by approximate score with the table-path score
-    * kept for the identity certificate. */
-  private def ivfPqScan(cells: DataFrame, pqCents: DataFrame,
-      codes: DataFrame, vecs: DataFrame, queryPred: Column,
-      candidates: Int, nprobe: Int, m: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val subWidth = Dim / m
-    val queries = pqQueries(vecs, queryPred)
-    val qprobe = nearestCells(packCodebook(cells))(
-      vecs.filter(queryPred).select(col("vec_id"), col("embedding").as("e"),
-        l2norm(col("embedding")).as("nrm")), nprobe)
-      .select(col("vec_id").as("query_id"), col("cell").as("ivf_cell"))
-    val qc = queries.crossJoin(packCodebook(cells))
-      .select(col("query_id"), explode(transform(col("cents"), c => struct(
-        c.getField("c_id").as("ivf_cell"),
-        dot(col("q"), c.getField("c_e")).as("qcd")))).as("t"))
-      .select(col("query_id"), col("t.ivf_cell").as("ivf_cell"),
-        col("t.qcd").as("qcd"))
-    val qtab = queries.crossJoin(pqPack(pqCents))
-      .select(col("query_id"), explode(transform(col("cents"), c => struct(
-        c.getField("m").as("m"), c.getField("c_id").as("code"),
-        dot(slice(col("q"), c.getField("m") * subWidth + 1, lit(subWidth)),
-          c.getField("c_e")).as("pd")))).as("t"))
-      .select(col("query_id"), col("t.m").as("m"), col("t.code").as("code"),
-        col("t.pd").as("pd"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_dot").desc, col("vec_id"))
-    codes
-      .join(broadcast(qprobe), Seq("ivf_cell")) // cell-pruned scan
-      .join(broadcast(qtab), Seq("query_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(first(col("ivf_cell")).as("ivf_cell"),
-        sum(col("pd")).as("res_dot"))
-      .join(broadcast(qc), Seq("query_id", "ivf_cell"))
+    def rankBy(score: String): Column = row_number().over(Window
+      .partitionBy(col("query_id")).orderBy(col(score).desc, col("vec_id")))
+    val subWidth = Dim / index.spec.m
+    val queries = vecs.filter(queryPred)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
+        l2norm(col("embedding")).as("q_nrm"))
+    // per-query partial-dot table: Q·M·K rows, broadcastable
+    val qtab = queries.crossJoin(pqPack(index.cents))
+      .select(col("query_id"), col("q_nrm"),
+        explode(transform(col("cents"), c => struct(
+          c.getField("m").as("m"), c.getField("c_id").as("cell"),
+          dot(slice(col("q"), c.getField("m") * subWidth + 1, lit(subWidth)),
+            c.getField("c_e")).as("pd")))).as("t"))
+      .select(col("query_id"), col("q_nrm"),
+        col("t.m").as("m"), col("t.cell").as("cell"), col("t.pd").as("pd"))
+    val withCents = joinCents(index.codes, index.cents)
+    val byVec = withCents.groupBy(col("vec_id"))
+    val rv = flatten(transform(
+      array_sort(collect_list(struct(col("m"), col("c_e")))),
+      x => x.getField("c_e"))).as("rv")
+    val (scan, approx, recon, direct) = index.cells match {
+      case None =>
+        val scan = withCents
+          .select(col("vec_id"), col("m"), col("cell"),
+            (col("c_nrm") * col("c_nrm")).as("c_nrm2"))
+          .join(broadcast(qtab), Seq("m", "cell"))
+          .groupBy(col("query_id"), col("vec_id"))
+          .agg(first(col("q_nrm")).as("q_nrm"), sum(col("pd")).as("adc_dot"),
+            sum(col("c_nrm2")).as("r_nrm2"))
+        // same degenerate-safe form on both paths, so the certificate
+        // compares -2.0 to -2.0 on zero-norm rows
+        (scan, safeCos(col("adc_dot"), col("q_nrm"), sqrt(col("r_nrm2"))),
+          byVec.agg(rv),
+          safeCos(dot(col("q"), col("rv")), col("qn"), sqrt(col("r_nrm2"))))
+      case Some(cells) =>
+        val codebook = packCodebook(cells)
+        val qprobe = nearestCells(codebook)(
+            queries.toDF("vec_id", "e", "nrm"), nprobe)
+          .select(col("vec_id").as("query_id"), col("cell").as("ivf_cell"))
+        val qc = queries.crossJoin(codebook)
+          .select(col("query_id"), explode(transform(col("cents"), c => struct(
+            c.getField("c_id").as("ivf_cell"),
+            dot(col("q"), c.getField("c_e")).as("qcd")))).as("t"))
+          .select(col("query_id"), col("t.ivf_cell").as("ivf_cell"),
+            col("t.qcd").as("qcd"))
+        val scan = index.codes
+          .join(broadcast(qprobe), Seq("ivf_cell")) // cell-pruned scan
+          .join(broadcast(qtab), Seq("query_id", "m", "cell"))
+          .groupBy(col("query_id"), col("vec_id"))
+          .agg(first(col("ivf_cell")).as("ivf_cell"),
+            sum(col("pd")).as("res_dot"))
+          .join(broadcast(qc), Seq("query_id", "ivf_cell"))
+        // cell centroid and flattened residual entries dotted SEPARATELY
+        // in double — summing the float arrays elementwise first would
+        // round each (c + r) to float and push the two paths ~1e-7
+        // apart; the certificate's point is independent DATAFLOW
+        // (direct dots vs table-join partial sums), not a third
+        // rounding mode
+        (scan, col("qcd") + col("res_dot"),
+          byVec.agg(first(col("ivf_cell")).as("ivf_cell"), rv)
+            .join(broadcast(cells), col("ivf_cell") === col("c_id"))
+            .select(col("vec_id"), col("c_e").as("cell_e"), col("rv")),
+          dot(col("q"), col("cell_e")) + dot(col("q"), col("rv")))
+    }
+    val topC = scan
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("approx_dot", col("qcd") + col("res_dot"))
-      .withColumn("arank", row_number().over(w))
+      .withColumn("approx", approx)
+      .withColumn("arank", rankBy("approx"))
       .filter(col("arank") <= candidates)
-  }
-
-  /** IVF-PQ serving query: scan the probed cells' codes, exact-cosine
-    * re-rank the `candidates` survivors, return top-k — retrieve cost
-    * is codes-only until the final C full-vector fetches per query.
-    * Emits the table≡reconstruction identity certificate per row:
-    * the scan's approximate dot must match (1e-9) an independently
-    * built dot against cell-centroid + reconstructed residual. */
-  def knnIvfPq(vecs: DataFrame, queryPred: Column, k: Int = 5,
-      nprobe: Int = 2, candidates: Int = 50,
-      centroidBudget: Int = CentroidBudget, m: Int = PqM,
-      refineIters: Int = RefineIters): DataFrame = {
-    val (cells, pqCents, codes) =
-      ivfPqIndex(vecs, centroidBudget, m, refineIters)
-    knnIvfPqFrom(cells, pqCents, codes, vecs, queryPred, k, nprobe,
-      candidates, m)
-  }
-
-  /** The cell-pruned scan + exact re-rank SERVING path of [[knnIvfPq]],
-    * taking PREBUILT index state (the three frames [[ivfPqIndex]]
-    * materializes: coarse cells, residual PQ centroids, per-(vector,
-    * subspace) codes). No coarse or residual k-means runs here — the
-    * cost is the probed cells' code scan, the broadcast query tables,
-    * and C full-vector fetches per query. */
-  def knnIvfPqFrom(cells: DataFrame, pqCents: DataFrame, codes: DataFrame,
-      vecs: DataFrame, queryPred: Column, k: Int = 5, nprobe: Int = 2,
-      candidates: Int = 50, m: Int = PqM): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val topC = ivfPqScan(cells, pqCents, codes, vecs, queryPred,
-      candidates, nprobe, m)
-    // reconstruction path: cell centroid + flattened residual codebook
-    // entries, dotted SEPARATELY in double — summing the float arrays
-    // elementwise first would round each (c + r) to float and push the
-    // two paths ~1e-7 apart; the certificate's point is independent
-    // DATAFLOW (direct dots vs table-join partial sums), not a third
-    // rounding mode
-    val recon = codes
-      .join(broadcast(pqCents.withColumnRenamed("m", "cm")),
-        col("m") === col("cm") && col("code") === col("c_id"))
-      .groupBy(col("vec_id"))
-      .agg(first(col("ivf_cell")).as("ivf_cell"),
-        flatten(transform(
-          array_sort(collect_list(struct(col("m"), col("c_e")))),
-          x => x.getField("c_e"))).as("res_rv"))
-      .join(broadcast(cells), col("ivf_cell") === col("c_id"))
-      .select(col("vec_id"), col("c_e").as("cell_e"), col("res_rv"))
     val corpus = vecs.select(col("vec_id"), col("embedding").as("n_e"),
       l2norm(col("embedding")).as("n_nrm"))
-    val queries = pqQueries(vecs, queryPred)
-      .select(col("query_id"), col("q"), col("q_nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
     topC
       .join(recon, "vec_id")
       .join(corpus, "vec_id")
-      .join(queries, "query_id")
-      .withColumn("direct_dot",
-        dot(col("q"), col("cell_e")) + dot(col("q"), col("res_rv")))
+      .join(queries.select(col("query_id"), col("q"), col("q_nrm").as("qn")),
+        "query_id")
+      .withColumn("direct", direct)
       .withColumn("cos_sim",
         safeCos(dot(col("n_e"), col("q")), col("n_nrm"), col("qn")))
-      .withColumn("rk", row_number().over(w))
+      .withColumn("rk", rankBy("cos_sim"))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(col("cos_sim"), 4).as("cos_r"),
         col("rk").cast("int").as("rank"),
-        (abs(col("approx_dot") - col("direct_dot")) < 1e-9).as("adc_ok"))
+        (abs(col("approx") - col("direct")) < 1e-9).as("adc_ok"))
       .orderBy(col("query_id"), col("rank"))
   }
-
-  /** Correctness face for `knn_ivfpq` (same contract as
-    * [[knnPqAdcExact]]): probe EVERY cell, so the scan's candidate set
-    * covers the whole corpus minus what the approximate ordering cuts
-    * at `candidates` — with the finer m=32 residual grid, brute-force
-    * top-5 sits inside the scan's top-100 at sf0.001, sf0.01 AND sf0.1
-    * (measured: the exact face equals brute at C=100 everywhere on the
-    * tested {25,50,100} grid), so the C=200 default holds with ≥2×
-    * margin, the pipeline is deterministic, and the exact re-rank
-    * output EQUALS brute-force top-k — the DuckDB oracle recomputes
-    * the whole answer. */
-  def knnIvfPqExact(vecs: DataFrame, queryPred: Column, k: Int = 5,
-      candidates: Int = 200, centroidBudget: Int = CentroidBudget,
-      m: Int = 32, refineIters: Int = 1): DataFrame =
-    knnIvfPq(vecs, queryPred, k, nprobe = centroidBudget, candidates,
-      centroidBudget, m, refineIters)
 
   // ---- persisted index: build once, serve many ------------------------
   // At 100 TB an ANN index is built ONCE (the k-means + codebook +
   // encode phase — hours of cluster time) and served millions of times
-  // (codes-only scans — milliseconds to seconds). The knn_* build faces
-  // above conflate the two costs inside one query; this section is the
-  // production split: `build*Index` materializes the index frames as
-  // parquet (the vector-store counterpart of the dedup_incremental*
-  // text stores), and the `*Serve` faces read them back and run ONLY
-  // the serving plan. Build is idempotent and crash/race-safe: the
-  // index is written to a scratch directory and atomically renamed into
-  // place, so concurrent builders (two test suites, bench + verify)
-  // converge on one complete index and a killed build never leaves a
-  // half-index behind the marker.
+  // (codes-only scans — milliseconds to seconds). The registered build
+  // faces conflate the two costs inside one query; [[annServe]] is the
+  // production split: it materializes the index frames as parquet (the
+  // vector-store counterpart of the dedup_incremental* text stores),
+  // reads them back and runs ONLY the probe. Build is idempotent and
+  // crash/race-safe: the index is written to a scratch directory and
+  // atomically renamed into place, so concurrent builders (two test
+  // suites, bench + verify) converge on one complete index and a
+  // killed build never leaves a half-index behind the marker.
 
   /** Index store root — same scratch-root contract as
     * [[graft.operators.Etl.roundtripRoot]]; never under /root/testdata.
-    * `_v2`: v2 indexes carry the build-corpus geometry sidecar
-    * (verdict r16 #2) that the serve faces validate; pre-sidecar v1
-    * stores under the old root are simply orphaned scratch — serving
-    * one would bypass the drift refusal this round exists to add. */
+    * `_v3`: PQ and IVF-PQ stores share one layout (cents, codes,
+    * optional cells, one geometry sidecar); stores under older roots
+    * are simply orphaned scratch — serving one would misread its
+    * layout or bypass the sidecar's refusals. */
   def indexRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft_tmp") +
-      "/ann_index_v2"
+      "/ann_index_v3"
 
   private def sfTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** On-disk location of the PQ index for a dataset directory. The
-    * geometry rides the path, so parameter changes can never serve a
-    * stale-geometry index. */
-  def pqIndexPath(dir: String, m: Int = 32, refineIters: Int = 1): String =
-    s"$indexRoot/${sfTag(dir)}/pq_m${m}_r$refineIters"
-
-  def ivfPqIndexPath(dir: String, centroidBudget: Int = CentroidBudget,
-      m: Int = 32, refineIters: Int = 1): String =
-    s"$indexRoot/${sfTag(dir)}/ivfpq_c${centroidBudget}_m${m}_r$refineIters"
+  /** On-disk location of the `spec` index for a dataset directory. */
+  def annIndexPath(dir: String, spec: AnnSpec): String =
+    s"$indexRoot/${sfTag(dir)}/${spec.tag}"
 
   private val IndexMarker = "_GRAFT_INDEX_OK"
 
@@ -1558,51 +1431,12 @@ object Similarity {
     path
   }
 
-  /** Materialize the PQ index (exact-face geometry by default): centroid
-    * rows + the narrow (vec_id, m, cell) code store, plus the one-row
-    * geometry sidecar ([[buildLshStore]]'s discipline, verdict r16 #2):
-    * (pq_k, m, refine_iters, build_count). The serve face reads it
-    * back and REFUSES a store whose indexed corpus no longer matches
-    * the live one — post-build vectors have no code rows, so serving a
-    * stale index silently omits them from every answer. */
-  def buildPqIndex(vecs: DataFrame, path: String, k: Int = PqK,
-      refineIters: Int = 1, m: Int = 32): Unit = {
-    val buildCount = vecs.count()
-    val (cents, assigned) = pqAssignments(vecs, k, refineIters, m)
-    cents.write.mode("overwrite").parquet(s"$path/cents")
-    assigned.select(col("vec_id"), col("m"), col("cell"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    import vecs.sparkSession.implicits._
-    Seq((k, m, refineIters, buildCount))
-      .toDF("pq_k", "m", "refine_iters", "build_count")
-      .write.mode("overwrite").parquet(s"$path/geometry")
-  }
-
-  /** Materialize the IVF-PQ index: coarse cells, residual PQ centroids,
-    * the (vec_id, m, code, ivf_cell) code store, and the one-row
-    * geometry sidecar (centroid_budget, m, refine_iters, build_count)
-    * the serve face validates — see [[buildPqIndex]]. */
-  def buildIvfPqIndex(vecs: DataFrame, path: String,
-      centroidBudget: Int = CentroidBudget, m: Int = 32,
-      refineIters: Int = 1): Unit = {
-    val buildCount = vecs.count()
-    val (cells, pqCents, codes) =
-      ivfPqIndex(vecs, centroidBudget, m, refineIters)
-    cells.write.mode("overwrite").parquet(s"$path/cells")
-    pqCents.write.mode("overwrite").parquet(s"$path/pq_cents")
-    codes.write.mode("overwrite").parquet(s"$path/codes")
-    import vecs.sparkSession.implicits._
-    Seq((centroidBudget, m, refineIters, buildCount))
-      .toDF("centroid_budget", "m", "refine_iters", "build_count")
-      .write.mode("overwrite").parquet(s"$path/geometry")
-  }
-
   /** Read + validate an ANN index's one-row geometry sidecar, then
     * apply the two refusals the persisted dedup stores pin
     * (Dedup.incrementalNearServe's contract, verdict r16 #2):
-    *  - sub-quantizer count in the sidecar differing from the one the
-    *    serving plan will decode with — a foreign or corrupt store
-    *    whose codes would be misread, not merely stale;
+    *  - stored geometry differing from the spec the serving plan will
+    *    decode with — a foreign or corrupt store whose codes would be
+    *    misread, not merely stale;
     *  - live corpus count differing from the indexed one — vectors
     *    added since the build have NO code rows, so a stale index
     *    serves silently incomplete answers (and a shrunk corpus means
@@ -1610,7 +1444,7 @@ object Similarity {
     * Loud refusal, never a silent recall cliff; rebuilding past drift
     * is REQUIRED by design, never implicit. */
   private def requireServableIndex(vecs: DataFrame, path: String,
-      m: Int): Unit = {
+      spec: AnnSpec): Unit = {
     val geo = vecs.sparkSession.read.parquet(s"$path/geometry")
       .collect() match {
       case Array(row) => row
@@ -1618,12 +1452,12 @@ object Similarity {
         s"ANN index $path: geometry sidecar has ${rows.length} rows, " +
           "expected exactly 1 — corrupt store")
     }
-    val storedM = geo.getAs[Int]("m")
-    require(storedM == m,
-      s"ANN index $path: store was built with m=$storedM sub-quantizers " +
-        s"but the serving plan decodes m=$m — foreign store; point the " +
-        "serve at the index built for this geometry (the path encodes " +
-        "it) or rebuild")
+    val stored = AnnSpec(Option(geo.getAs[Integer]("cells")).map(_.toInt),
+      geo.getAs[Int]("m"), geo.getAs[Int]("k"), geo.getAs[Int]("refine_iters"))
+    require(stored == spec,
+      s"ANN index $path: store was built as $stored but the serving " +
+        s"plan decodes $spec — foreign store; point the serve at the " +
+        "index built for this geometry (the path encodes it) or rebuild")
     val built = geo.getAs[Long]("build_count")
     val live = vecs.count()
     require(live == built,
@@ -1634,34 +1468,39 @@ object Similarity {
         "snapshot it was built on)")
   }
 
-  /** Serve-only PQ top-k: ensure the persisted index exists (built on
-    * first touch — in a bench run that lands in the untimed warmup
-    * pass), then run [[knnPqAdcFrom]] against the parquet-backed code
-    * store. Exact-face geometry (m=32, C=200) ⇒ output equals
-    * brute-force top-k and rides the same full oracle. */
-  def knnPqServe(vecs: DataFrame, queryPred: Column, path: String,
-      k: Int = 5, candidates: Int = 200, m: Int = 32): DataFrame = {
-    ensureIndex(path)(tmp => buildPqIndex(vecs, tmp, m = m))
-    requireServableIndex(vecs, path, m)
+  /** Serve-only top-k from the persisted `spec` index at `path`:
+    * build and write it on first touch (in a bench run that lands in
+    * the untimed warmup pass), refuse a store that does not match
+    * ([[requireServableIndex]]), then [[annProbe]] the parquet-backed
+    * frames. The registered faces run the exact geometry, so their
+    * output equals brute-force top-k and rides the same full oracle; a
+    * production IVF-PQ deployment serves nprobe ≪ C. */
+  def annServe(vecs: DataFrame, queryPred: Column, path: String,
+      spec: AnnSpec, k: Int = 5, candidates: Int = 200,
+      nprobe: Int = CentroidBudget): DataFrame = {
     val spark = vecs.sparkSession
-    knnPqAdcFrom(spark.read.parquet(s"$path/cents"),
-      spark.read.parquet(s"$path/codes"), vecs, queryPred, k, candidates, m)
+    ensureIndex(path) { tmp =>
+      import spark.implicits._
+      val buildCount = vecs.count()
+      val index = annBuild(vecs, spec)
+      index.cents.write.parquet(s"$tmp/cents")
+      index.codes.write.parquet(s"$tmp/codes")
+      index.cells.foreach(_.write.parquet(s"$tmp/cells"))
+      Seq((spec.cells, spec.k, spec.m, spec.refineIters, buildCount))
+        .toDF("cells", "k", "m", "refine_iters", "build_count")
+        .write.parquet(s"$tmp/geometry")
+    }
+    requireServableIndex(vecs, path, spec)
+    def load(part: String) = spark.read.parquet(s"$path/$part")
+    annProbe(AnnIndex(spec, load("cents"), load("codes"),
+      spec.cells.map(_ => load("cells"))), vecs, queryPred, k, candidates,
+      nprobe)
   }
 
-  /** Serve-only IVF-PQ top-k from the persisted index — the IVFADC
-    * serving plan alone. The registry face probes every cell (exact
-    * contract); a production deployment serves nprobe ≪ C. */
-  def knnIvfPqServe(vecs: DataFrame, queryPred: Column, path: String,
-      k: Int = 5, nprobe: Int = CentroidBudget, candidates: Int = 200,
-      m: Int = 32): DataFrame = {
-    ensureIndex(path)(tmp => buildIvfPqIndex(vecs, tmp, m = m))
-    requireServableIndex(vecs, path, m)
-    val spark = vecs.sparkSession
-    knnIvfPqFrom(spark.read.parquet(s"$path/cells"),
-      spark.read.parquet(s"$path/pq_cents"),
-      spark.read.parquet(s"$path/codes"),
-      vecs, queryPred, k, nprobe, candidates, m)
-  }
+  /** [[annServe]] of a plain PQ index. */
+  def knnPqServe(vecs: DataFrame, queryPred: Column, path: String,
+      k: Int = 5, candidates: Int = 200, m: Int = 32): DataFrame =
+    annServe(vecs, queryPred, path, PqSpec.copy(m = m), k, candidates)
 
   /** Top principal component of the embedding corpus — the
     * whitening/variance-analysis primitive an embedding pipeline runs
@@ -2115,8 +1954,7 @@ object Similarity {
     val cand = candidates.getOrElse(
       graft.sources.Knobs.optInt("knn.candidates")
         .getOrElse(autoAdcCandidates(n)))
-    val (cells, pqCents, codes) = ivfPqIndex(vecs, m = 32,
-      refineIters = 1)
+    val index = annBuild(vecs, IvfPqSpec)
     // ground truth via the two-pass threshold top-k: bit-identical to
     // knnBrute, without the O(n·Q·log) rank sort (verdict r16 #5)
     val exact = knnBruteThreshold(vecs, pred, k)
@@ -2134,16 +1972,15 @@ object Similarity {
         s"${exactN.toLong} exact neighbor rows over a corpus of $n " +
         "vectors; the operating table needs a non-empty query sample " +
         "and ground truth (check knn.audit_queries and the corpus)")
-    val cellSizes = codes.filter(col("m") === 0)
+    val cellSizes = index.codes.filter(col("m") === 0)
       .groupBy(col("ivf_cell")).agg(count(lit(1)).as("csz"))
       .localCheckpoint(true)
     val rows = probes.map { p =>
-      val approx = knnIvfPqFrom(cells, pqCents, codes, vecs, pred, k, p,
-        cand, m = 32)
+      val approx = annProbe(index, vecs, pred, k, cand, p)
         .select(col("query_id"), col("neighbor_id"))
       val hits = exact
         .join(approx, Seq("query_id", "neighbor_id"), "left_semi").count()
-      val scanned = nearestCells(packCodebook(cells))(corpusQ, p)
+      val scanned = nearestCells(packCodebook(index.cells.get))(corpusQ, p)
         .toDF("query_id", "q_e", "q_nrm", "ivf_cell")
         .join(cellSizes, "ivf_cell")
         .agg(coalesce(sum(col("csz")), lit(0L))).collect()(0).getLong(0)
@@ -2768,18 +2605,16 @@ object Similarity {
     // at sf1 where scramble-replica neighbors rank as low as ~348
     "knn_pq_adc" -> { (s, dir) =>
       val vecs = Tables.load(s, dir, "embeddings")
-      knnPqAdcExact(vecs, col("vec_id") < 10,
-        candidates = Knobs.optInt("knn.candidates")
-          .getOrElse(autoAdcCandidates(vecs.count())))
+      annProbe(annBuild(vecs, PqSpec), vecs, col("vec_id") < 10,
+        candidates = knnCandidates(vecs))
     },
     // the composed IVF-PQ index under the same probe-everything +
     // rerank contract: coarse routing, residual codes, table scan and
     // exact re-rank all ride the brute-force hash
     "knn_ivfpq" -> { (s, dir) =>
       val vecs = Tables.load(s, dir, "embeddings")
-      knnIvfPqExact(vecs, col("vec_id") < 10,
-        candidates = Knobs.optInt("knn.candidates")
-          .getOrElse(autoAdcCandidates(vecs.count())))
+      annProbe(annBuild(vecs, IvfPqSpec), vecs, col("vec_id") < 10,
+        candidates = knnCandidates(vecs))
     },
     // serve-only faces: the persisted index is built on first touch
     // (bench warmup / first verify), so the timed path is the SERVING
@@ -2788,15 +2623,13 @@ object Similarity {
     // the build faces.
     "knn_pq_serve" -> { (s, dir) =>
       val vecs = Tables.load(s, dir, "embeddings")
-      knnPqServe(vecs, col("vec_id") < 10, pqIndexPath(dir),
-        candidates = Knobs.optInt("knn.candidates")
-          .getOrElse(autoAdcCandidates(vecs.count())))
+      annServe(vecs, col("vec_id") < 10, annIndexPath(dir, PqSpec), PqSpec,
+        candidates = knnCandidates(vecs))
     },
     "knn_ivfpq_serve" -> { (s, dir) =>
       val vecs = Tables.load(s, dir, "embeddings")
-      knnIvfPqServe(vecs, col("vec_id") < 10, ivfPqIndexPath(dir),
-        candidates = Knobs.optInt("knn.candidates")
-          .getOrElse(autoAdcCandidates(vecs.count())))
+      annServe(vecs, col("vec_id") < 10, annIndexPath(dir, IvfPqSpec),
+        IvfPqSpec, candidates = knnCandidates(vecs))
     },
     // integer-exact end to end: the packing, the distances, and the
     // ranking are all BIGINT arithmetic, so the hash carries the whole

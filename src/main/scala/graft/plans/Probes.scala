@@ -39,19 +39,11 @@ object Probes {
       try Await.result(obs.future, 1500.millis)
       catch {
         case _: java.util.concurrent.TimeoutException =>
+          System.err.println("[graft] checkpointObserved fallback: " +
+            "observed metrics did not arrive within 1.5 s; recomputing " +
+            "the aggregate from the checkpoint")
           ck.agg(aggs.head, aggs.tail: _*).head()
       }
     (ck, row)
-  }
-
-  /** [[checkpointObserved]] through the fixpoint-loop stats reset
-    * ([[Loops.checkpointFresh]]' contract): the returned frame is a
-    * fresh leaf over the SAME materialized rows, so run-to-convergence
-    * loops keep bounded plan statistics AND their per-round
-    * convergence probe fused into the round's one materialization. */
-  def checkpointFreshObserved(df: DataFrame,
-      aggs: Column*): (DataFrame, Row) = {
-    val (ck, row) = checkpointObserved(df, aggs: _*)
-    (org.apache.spark.sql.classic.GraftStatsReset.freshLeaf(ck), row)
   }
 }

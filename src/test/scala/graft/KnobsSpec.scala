@@ -193,7 +193,8 @@ class KnobsSpec extends GraftSpec {
   test("knn.candidates reaches the ADC budget: the registered face " +
       "under the knob equals the explicit-budget call") {
     val vecs = graft.sources.Tables.load(spark, sf, "embeddings")
-    val explicit = graft.operators.Similarity.knnPqAdcExact(vecs,
+    val sim = graft.operators.Similarity
+    val explicit = sim.annProbe(sim.annBuild(vecs, sim.PqSpec), vecs,
       col("vec_id") < 10, candidates = 64).collect()
       .map(_.toString).toSet
     withKnobs(Map("knn.candidates" -> "64")) {

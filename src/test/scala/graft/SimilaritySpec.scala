@@ -8,6 +8,14 @@ class SimilaritySpec extends GraftSpec {
 
   private lazy val vecs = Tables.load(spark, sf, "embeddings")
 
+  /** The two ANN index specs every PQ / IVF-PQ test runs over. */
+  private val annSpecs =
+    Seq("PQ" -> Similarity.PqSpec, "IVF-PQ" -> Similarity.IvfPqSpec)
+
+  /** (query_id, neighbor_id, rank) of collected top-k rows. */
+  private def ranked(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
+
   test("brute-force kNN matches an independently computed top-1") {
     val rows = vecs.select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
@@ -370,37 +378,16 @@ class SimilaritySpec extends GraftSpec {
 
   test("ADC retrieve-then-rerank equals brute-force top-k with the " +
     "identity certificate on every row") {
-    val brute = Similarity.knnBrute(vecs, col("vec_id") < 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
-    val face = Similarity.knnPqAdcExact(vecs, col("vec_id") < 10).collect()
-    assert(face.forall(_.getBoolean(4)), "ADC != reconstruction cosine")
-    assert(face.map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
-      == brute,
-      "rerank face diverged from brute force — ADC top-C lost a true " +
-        "top-k neighbor (raise candidates or fix the code scan)")
-  }
-
-  test("IVF-PQ exact face equals brute-force top-k; certificate and " +
-    "determinism hold; probing fewer cells degrades gracefully") {
-    val brute = Similarity.knnBrute(vecs, col("vec_id") < 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
-    val face = Similarity.knnIvfPqExact(vecs, col("vec_id") < 10).collect()
-    assert(face.forall(_.getBoolean(4)),
-      "IVF-PQ table score != centroid+reconstruction dot")
-    assert(face.map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSeq
-      == brute, "probe-all IVF-PQ rerank diverged from brute force")
-    // the serving face: probed-cell scan + rerank — recall floor only
-    // (near-random corpus gives the coarse quantizer little structure)
-    val serving = Similarity.knnIvfPq(vecs, col("vec_id") < 10,
-      nprobe = 4, candidates = 50).collect()
-    assert(serving.forall(_.getBoolean(4)))
-    val servingSet = serving.map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bruteSet = brute.map(t => (t._1, t._2)).toSet
-    assert((servingSet & bruteSet).size.toDouble / bruteSet.size >= 0.2,
-      "IVF-PQ serving recall collapsed")
-    val serving2 = Similarity.knnIvfPq(vecs, col("vec_id") < 10,
-      nprobe = 4, candidates = 50).collect()
-    assert(serving.toSeq == serving2.toSeq, "IVF-PQ is not deterministic")
+    val brute = ranked(Similarity.knnBrute(vecs, col("vec_id") < 10).collect())
+    for ((name, spec) <- annSpecs) {
+      val face = Similarity.annProbe(Similarity.annBuild(vecs, spec), vecs,
+        col("vec_id") < 10).collect()
+      assert(face.forall(_.getBoolean(4)),
+        s"$name: table-lookup score != reconstruction score")
+      assert(ranked(face) == brute,
+        s"$name: rerank diverged from brute force — the scan's top-C lost " +
+          "a true top-k neighbor (raise candidates or fix the code scan)")
+    }
   }
 
   test("autoBitsPerBand: integer ceil-log2 of n/occupancy, clamped") {
@@ -433,55 +420,56 @@ class SimilaritySpec extends GraftSpec {
   test("serve faces read the persisted index: equal to build faces, " +
     "no rebuild on a second call, corpse dirs are replaced") {
     import java.nio.file.{Files, Paths}
-    val pqPath = Similarity.pqIndexPath(sf)
-    val ivfPath = Similarity.ivfPqIndexPath(sf)
-    // a markerless corpse (killed build) must be replaced, not served
-    val corpse = Paths.get(pqPath)
-    if (!Files.exists(corpse.resolve("_GRAFT_INDEX_OK"))) {
-      Files.createDirectories(corpse)
+    for ((name, spec) <- annSpecs) {
+      val path = Similarity.annIndexPath(sf, spec)
+      // a markerless corpse (killed build) must be replaced, not served
+      val corpse = Paths.get(path)
+      if (!Files.exists(corpse.resolve("_GRAFT_INDEX_OK"))) {
+        Files.createDirectories(corpse)
+      }
+      val serve = Similarity.annServe(vecs, col("vec_id") < 10, path, spec)
+        .collect()
+      val build = Similarity.annProbe(Similarity.annBuild(vecs, spec), vecs,
+        col("vec_id") < 10).collect()
+      assert(serve.toSeq == build.toSeq,
+        s"$name: serve diverged from build on the same geometry")
+      // second call serves the EXISTING index — the marker's mtime pins it
+      val marker = Paths.get(path, "_GRAFT_INDEX_OK")
+      val mtime = Files.getLastModifiedTime(marker)
+      val again = Similarity.annServe(vecs, col("vec_id") < 10, path, spec)
+        .collect()
+      assert(again.toSeq == serve.toSeq, s"$name: serve is not deterministic")
+      assert(Files.getLastModifiedTime(marker) == mtime,
+        s"$name: second serve rebuilt a complete index")
     }
-    val pqServe = Similarity.knnPqServe(vecs, col("vec_id") < 10, pqPath)
-      .collect()
-    val pqBuild = Similarity.knnPqAdcExact(vecs, col("vec_id") < 10)
-      .collect()
-    assert(pqServe.toSeq == pqBuild.toSeq,
-      "knnPqServe diverged from the build face on the same geometry")
-    val ivfServe = Similarity.knnIvfPqServe(vecs, col("vec_id") < 10,
-      ivfPath).collect()
-    val ivfBuild = Similarity.knnIvfPqExact(vecs, col("vec_id") < 10)
-      .collect()
-    assert(ivfServe.toSeq == ivfBuild.toSeq,
-      "knnIvfPqServe diverged from the build face on the same geometry")
-    // second call serves the EXISTING index — the marker's mtime pins it
-    val marker = Paths.get(pqPath, "_GRAFT_INDEX_OK")
-    val mtime = Files.getLastModifiedTime(marker)
-    val again = Similarity.knnPqServe(vecs, col("vec_id") < 10, pqPath)
-      .collect()
-    assert(again.toSeq == pqServe.toSeq, "serve is not deterministic")
-    assert(Files.getLastModifiedTime(marker) == mtime,
-      "second serve rebuilt a complete index")
+    // the plain-PQ shorthand serves the same store
+    assert(Similarity.knnPqServe(vecs, col("vec_id") < 10,
+      Similarity.annIndexPath(sf, Similarity.PqSpec)).collect().toSeq ==
+      Similarity.annServe(vecs, col("vec_id") < 10,
+        Similarity.annIndexPath(sf, Similarity.PqSpec), Similarity.PqSpec)
+        .collect().toSeq)
   }
 
-  test("sample-trained codebooks: above the 256·K training cap the " +
-    "exact IVF-PQ face still equals brute force (candidate margin " +
+  test("sample-trained codebooks: above the 256·K training cap both " +
+    "exact index specs still equal brute force (candidate margin " +
     "survives sampled Lloyd)") {
     // 5000 synthetic vectors > the 4096-vector training cap, so the
     // Lloyd passes genuinely train on a strict subset here (the
-    // verdict r16 #7 path); the exact face's contract must not move
-    import spark.implicits._
+    // verdict r16 #7 path); the exact geometry's contract must not move
     val synth = spark.range(5000).toDF("vec_id")
       .select(col("vec_id"), transform(sequence(lit(0), lit(63)),
         d => ((pmod(xxhash64(col("vec_id") * 64 + d), lit(2000))
           - 1000) / 1000.0).cast("float")).as("embedding"))
       .localCheckpoint(true)
     val cand = Similarity.autoAdcCandidates(5000L)
-    val got = Similarity.knnIvfPqExact(synth, col("vec_id") < 5,
-        candidates = cand).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-    val want = Similarity.knnBrute(synth, col("vec_id") < 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
-    assert(got.nonEmpty && got.toSeq == want.toSeq,
-      "sample-trained exact face diverged from brute force above the cap")
+    val want = ranked(Similarity.knnBrute(synth, col("vec_id") < 5).collect())
+    for ((name, spec) <- annSpecs) {
+      val got = Similarity.annProbe(Similarity.annBuild(synth, spec), synth,
+          col("vec_id") < 5, candidates = cand).collect()
+      assert(got.nonEmpty && ranked(got) == want,
+        s"$name: sample-trained exact geometry diverged from brute force " +
+          "above the cap")
+    }
   }
 
   test("two-pass threshold top-k is bit-identical to the window brute " +
@@ -508,71 +496,75 @@ class SimilaritySpec extends GraftSpec {
 
   test("serve faces refuse a drifted, foreign, or corrupt index — " +
     "the persisted-LSH-store refusal triple (verdict r16 #2)") {
-    // a PRIOR run of this test corrupts pq_subset's sidecar on purpose;
-    // start from a clean slate so reruns exercise the same sequence
-    // (the MedallionSpec orphan-location pattern)
+    // a PRIOR run of this test corrupts the sidecars on purpose; start
+    // from a clean slate so reruns exercise the same sequence (the
+    // MedallionSpec orphan-location pattern)
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
+    import spark.implicits._
     val refRoot = Paths.get(Similarity.indexRoot, "spec_refusals")
     if (Files.exists(refRoot)) {
       Files.walk(refRoot).iterator().asScala.toSeq.reverse
         .foreach(Files.deleteIfExists(_))
     }
-    // drift: index built over a strict subset of the live corpus —
-    // serving the full corpus would silently miss every post-build
-    // vector (they have no code rows)
     val subset = vecs.filter(col("vec_id") % 2 === 0)
-    val pqSub = Similarity.indexRoot + "/spec_refusals/pq_subset"
-    Similarity.ensureIndex(pqSub)(tmp =>
-      Similarity.buildPqIndex(subset, tmp))
-    val drift = intercept[IllegalArgumentException] {
-      Similarity.knnPqServe(vecs, col("vec_id") < 10, pqSub)
+    for ((name, spec) <- annSpecs) {
+      val path = s"$refRoot/${spec.tag}"
+      // an intact store + the exact build corpus serves
+      assert(Similarity.annServe(subset, col("vec_id") < 10, path, spec)
+        .count() > 0, name)
+      // drift: the store indexes a strict subset of the live corpus —
+      // serving the full corpus would silently miss every post-build
+      // vector (they have no code rows)
+      val drift = intercept[IllegalArgumentException] {
+        Similarity.annServe(vecs, col("vec_id") < 10, path, spec)
+      }
+      assert(drift.getMessage.contains("drifted corpus"), name)
+      // foreign store: the sidecar's geometry disagrees with the
+      // serving plan's — the codes would be DECODED wrong, not merely
+      // stale
+      val foreign = intercept[IllegalArgumentException] {
+        Similarity.annServe(subset, col("vec_id") < 10, path,
+          spec.copy(m = 16))
+      }
+      assert(foreign.getMessage.contains("foreign store"), name)
+      // corrupt sidecar: not exactly one geometry row
+      val row = (spec.cells, spec.k, spec.m, spec.refineIters, subset.count())
+      Seq(row, row).toDF("cells", "k", "m", "refine_iters", "build_count")
+        .write.mode("overwrite").parquet(s"$path/geometry")
+      val corrupt = intercept[IllegalStateException] {
+        Similarity.annServe(subset, col("vec_id") < 10, path, spec)
+      }
+      assert(corrupt.getMessage.contains("corrupt store"), name)
     }
-    assert(drift.getMessage.contains("drifted corpus"))
-    // ... and the IVF-PQ face applies the same refusal
-    val ivfSub = Similarity.indexRoot + "/spec_refusals/ivf_subset"
-    Similarity.ensureIndex(ivfSub)(tmp =>
-      Similarity.buildIvfPqIndex(subset, tmp))
-    val ivfDrift = intercept[IllegalArgumentException] {
-      Similarity.knnIvfPqServe(vecs, col("vec_id") < 10, ivfSub)
-    }
-    assert(ivfDrift.getMessage.contains("drifted corpus"))
-    // foreign store: sidecar m disagrees with the serving plan's m —
-    // the codes would be DECODED wrong, not merely stale
-    val foreign = intercept[IllegalArgumentException] {
-      Similarity.knnPqServe(subset, col("vec_id") < 10, pqSub, m = 16)
-    }
-    assert(foreign.getMessage.contains("foreign store"))
-    // corrupt sidecar: not exactly one geometry row
-    import spark.implicits._
-    Seq((Similarity.PqK, 32, 1, subset.count()),
-        (Similarity.PqK, 32, 1, subset.count()))
-      .toDF("pq_k", "m", "refine_iters", "build_count")
-      .write.mode("overwrite").parquet(s"$pqSub/geometry")
-    val corrupt = intercept[IllegalStateException] {
-      Similarity.knnPqServe(subset, col("vec_id") < 10, pqSub)
-    }
-    assert(corrupt.getMessage.contains("corrupt store"))
-    // an intact store + the exact build corpus still serves
-    assert(Similarity.knnIvfPqServe(subset, col("vec_id") < 10, ivfSub)
-      .count() > 0)
   }
 
   test("ADC scores equal cosine against the reconstruction; recall " +
     "vs brute is sane") {
-    // the face's in-plan certificate, re-checked here for every row
-    val face = Similarity.knnPqAdc(vecs, col("vec_id") < 10).collect()
-    assert(face.length == 50)
-    assert(face.forall(_.getBoolean(2)), "ADC != reconstruction cosine")
-    // recall floor: PQ with 4x16 codebooks on near-random 64-dim data
-    // retains limited structure — the floor is deliberately modest and
-    // the real contract is the identity certificate above
-    val brute = Similarity.knnBrute(vecs, col("vec_id") < 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val adc = Similarity.pqAdcRanked(vecs, col("vec_id") < 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (brute & adc).size.toDouble / brute.size
-    assert(recall >= 0.1, s"ADC recall vs brute $recall collapsed")
+    // the library-default coarse grid (m=4, 2-byte codes): PQ with
+    // candidates = k keeps the pure table-scan ranking; IVF-PQ probes 4
+    // of the 16 cells. Near-random 64-dim data keeps limited structure,
+    // so the recall floors are deliberately modest — the real contract
+    // is the identity certificate and determinism
+    val coarse = Similarity.AnnSpec(m = Similarity.PqM,
+      refineIters = Similarity.RefineIters)
+    val brute = ranked(Similarity.knnBrute(vecs, col("vec_id") < 10).collect())
+      .map(t => (t._1, t._2)).toSet
+    for ((name, spec, candidates, nprobe, floor) <- Seq(
+        ("PQ", coarse, 5, Similarity.CentroidBudget, 0.1),
+        ("IVF-PQ", coarse.copy(cells = Some(Similarity.CentroidBudget)), 50,
+          4, 0.2))) {
+      def run() = Similarity.annProbe(Similarity.annBuild(vecs, spec), vecs,
+        col("vec_id") < 10, candidates = candidates, nprobe = nprobe).collect()
+      val face = run()
+      assert(face.length == 50, name)
+      assert(face.forall(_.getBoolean(4)),
+        s"$name: table-lookup score != reconstruction score")
+      val got = face.map(r => (r.getLong(0), r.getLong(1))).toSet
+      val recall = (brute & got).size.toDouble / brute.size
+      assert(recall >= floor, s"$name: recall vs brute $recall collapsed")
+      assert(run().toSeq == face.toSeq, s"$name: probe is not deterministic")
+    }
   }
 
   test("standardize: per-dim zero mean / unit variance on the fixture, " +
